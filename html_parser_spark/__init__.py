@@ -12,4 +12,3 @@ from html_parser_spark.config import (
 )
 
 __all__ = ["ParserConfig", "TOKEPARSER_CONFIG", "EXTRACT_CONFIG"]
-__version__ = "0.1.0"

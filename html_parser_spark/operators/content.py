@@ -31,7 +31,11 @@ from pyspark.sql import types as T
 from html_parser_spark.config import ParserConfig
 from html_parser_spark.functions import assemble, project
 from html_parser_spark.functions.tokenizer import ascii_lower, tokenize
-from html_parser_spark.operators.extract import _fanout_arrow
+from html_parser_spark.operators.extract import (
+    _arrow_map,
+    _each_turn,
+    _fan_out,
+)
 
 #: block-level elements that delimit content blocks (HTML4/5 block
 #: and sectioning tags — public tag-category knowledge, the same
@@ -156,12 +160,12 @@ def content_blocks(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
     the product too: a curation pipeline thresholds them corpus-wide
     (e.g. drop pages whose content ratio is tiny)."""
 
-    def per_turn(doc):
+    def rows(doc):
         for i, (txt, n_words, ld, keep) in enumerate(
                 _blocks(doc, cfg, min_words, max_link_density)):
             yield i, txt, n_words, ld, keep
 
-    return _fanout_arrow(df, text_col, BLOCKS_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, BLOCKS_SCHEMA, _fan_out(rows))
 
 
 def main_content(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
@@ -173,12 +177,12 @@ def main_content(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
     boilerplate-stripped 'article text' of each turn, fused in one
     Arrow stage like the flagship extractor."""
 
-    def per_turn(doc):
+    def row(doc):
         blocks = _blocks(doc, cfg, min_words, max_link_density)
         kept = [b[0] for b in blocks if b[3]]
-        yield sep.join(kept), len(blocks), len(kept)
+        return sep.join(kept), len(blocks), len(kept)
 
-    return _fanout_arrow(df, text_col, MAIN_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, MAIN_SCHEMA, _each_turn(row))
 
 
 def _table_cells(doc: str, cfg: ParserConfig):
@@ -320,7 +324,5 @@ def extract_tables(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
     map-only, shuffle-free, skew-immune, so the plan is unchanged at
     100 TB."""
 
-    def per_turn(doc):
-        yield from _table_cells(doc, cfg)
-
-    return _fanout_arrow(df, text_col, TABLES_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, TABLES_SCHEMA,
+                      _fan_out(lambda doc: _table_cells(doc, cfg)))

@@ -71,9 +71,7 @@ def crawl_frontier(sitemaps: DataFrame, robots: DataFrame,
                     F.col("allowed").alias("robots_allowed"),
                     "matched_rule"),
         ["host", "path"])
-    # url_filter re-derives 'host' from the url itself, so drop the
-    # join key first and keep its single host column
-    gated = url_filter(joined.drop("host"), url_col="url",
+    gated = url_filter(joined, url_col="url",
                        blocked_domains=blocked_domains,
                        blocked_substrings=blocked_substrings)
     return gated.select(

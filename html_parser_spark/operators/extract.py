@@ -8,50 +8,34 @@ the scan to the key + text columns (we pre-select them so the
 parquet/Iceberg reader never materializes the rest).
 
 At 100 TB the cost model is: scan (columnar, pruned) -> Arrow batches
-to the Python worker -> per-document FSM -> Arrow back.  Every
-operator here builds its output as pyarrow RecordBatches directly —
-no pandas detour (5x cheaper for map/list columns, measured).  No
-shuffle, no skew sensitivity (a hot conv_id just means more rows, all
-independent); ``plans.pipeline`` adds salted repartitioning only when
-a downstream stage needs conv-level grouping or balanced output files.
+to the Python worker -> per-document FSM -> Arrow back.  That
+boundary is one helper, :func:`_arrow_map`, shared by every per-turn
+operator here and in ``operators.content``: it prunes and casts the
+keys, hands the operator the batch's text with NULL as ``""``, and
+builds the output RecordBatch directly — no pandas detour (5x cheaper
+for map/list columns, measured). An operator with one row per turn
+passes the key columns through by reference; a fan-out operator
+records the input row of each output row and the keys are gathered
+with one Arrow ``take``.  No shuffle, no skew sensitivity (a hot
+conv_id just means more rows, all independent); ``plans.pipeline``
+adds salted repartitioning only when a downstream stage needs
+conv-level grouping or balanced output files.
 """
 
 from __future__ import annotations
+
+import itertools
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from html_parser_spark.config import EXTRACT_CONFIG, ParserConfig
 from html_parser_spark.functions import assemble
 from html_parser_spark.functions.tagset import DEFAULT_TEXTIFY
 from html_parser_spark.functions.tokenizer import tokenize
-
-#: key columns carried through every per-turn operator
-KEY_COLS = ("conv_id", "turn_idx")
-
-
-def _to_arrow_type(dt):
-    """Spark -> Arrow physical type for the field types used here."""
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.BooleanType):
-        return pa.bool_()
-    if isinstance(dt, T.MapType):
-        return pa.map_(_to_arrow_type(dt.keyType),
-                       _to_arrow_type(dt.valueType))
-    if isinstance(dt, T.ArrayType):
-        return pa.list_(_to_arrow_type(dt.elementType))
-    raise TypeError(f"unmapped Spark type: {dt}")
 
 
 def _pa_arr(vals, typ):
@@ -85,44 +69,77 @@ def _pa_arr(vals, typ):
         return pa.array([fix(v) for v in vals], typ)
 
 
-def _fanout_arrow(df: DataFrame, text_col: str, schema: T.StructType,
-                  per_turn) -> DataFrame:
-    """Generic per-turn fan-out operator: ``per_turn(doc)`` yields one
-    tuple per output row holding the columns after (conv_id,
-    turn_idx). One Arrow stage, shuffle-free, RecordBatches out."""
+def _arrow_map(df: DataFrame, text_col: str, schema: T.StructType,
+               per_batch) -> DataFrame:
+    """The per-turn Arrow boundary: every operator that maps turns to
+    rows crosses between Spark and Python here, in one
+    ``mapInArrow`` stage (shuffle-free, RecordBatches in and out).
+
+    The input is pruned to ``conv_id`` (as string), ``turn_idx`` (as
+    int) and ``text_col``. ``per_batch`` is a generator function: it
+    gets an iterator of text lists, one per non-empty Arrow batch with
+    NULL / non-str text as ``""``, and yields one ``(idx, cols)`` per
+    list. ``cols`` holds the value columns in ``schema`` order after
+    the two keys, as lists or ready ``pa.Array``s. ``idx`` is None
+    when there is exactly one output row per turn, so the key columns
+    pass through by reference; otherwise it holds the input-row index
+    of every output row, and the keys are built with one Arrow
+    ``take``."""
     names = schema.fieldNames()
-    val_fields = [(f.name, _to_arrow_type(f.dataType))
-                  for f in schema.fields[2:]]
+    types = [to_arrow_type(f.dataType) for f in schema.fields[2:]]
 
     def run(batches):
         import pyarrow as pa
 
-        for rb in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            a_conv = cols["conv_id"].append
-            a_turn = cols["turn_idx"].append
-            appends = [cols[n].append for n, _ in val_fields]
-            for conv_id, turn_idx, doc in zip(
-                rb.column("conv_id").to_pylist(),
-                rb.column("turn_idx").to_pylist(),
-                rb.column(text_col).to_pylist(),
-            ):
-                doc = doc if isinstance(doc, str) else ""
-                for tup in per_turn(doc):
-                    a_conv(conv_id)
-                    a_turn(turn_idx)
-                    for ap, v in zip(appends, tup):
-                        ap(v)
-            if cols["conv_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols["conv_id"], pa.string()),
-                     pa.array(cols["turn_idx"], pa.int32())]
-                    + [_pa_arr(cols[n], typ) for n, typ in val_fields],
-                    names=names)
+        # per_batch pulls one text list per result it yields, so the
+        # tee holds at most one batch for the key side
+        keyed, texts = itertools.tee(rb for rb in batches if rb.num_rows)
+        docs = ([d if isinstance(d, str) else ""
+                 for d in rb.column(2).to_pylist()] for rb in texts)
+        for rb, (idx, cols) in zip(keyed, per_batch(docs)):
+            keys = [rb.column(0), rb.column(1)]
+            if idx is not None:
+                if not idx:
+                    continue
+                take = pa.array(idx, pa.int32())
+                keys = [k.take(take) for k in keys]
+            yield pa.RecordBatch.from_arrays(
+                keys + [c if isinstance(c, pa.Array) else _pa_arr(c, typ)
+                        for c, typ in zip(cols, types)],
+                names=names)
 
     return df.select(F.col("conv_id").cast("string"),
                      F.col("turn_idx").cast("int"),
                      text_col).mapInArrow(run, schema)
+
+
+def _each_turn(one_row):
+    """``per_batch`` for an operator with one output row per turn:
+    ``one_row(doc)`` returns that row's value tuple."""
+
+    def per_batch(doc_batches):
+        for docs in doc_batches:
+            yield None, list(zip(*map(one_row, docs)))
+
+    return per_batch
+
+
+def _fan_out(rows):
+    """``per_batch`` for a fan-out operator: ``rows(doc)`` yields one
+    value tuple per output row of that turn."""
+
+    def per_batch(doc_batches):
+        for docs in doc_batches:
+            idx = []
+            out = []
+            for i, doc in enumerate(docs):
+                for row in rows(doc):
+                    idx.append(i)
+                    out.append(row)
+            yield idx, list(zip(*out))
+
+    return per_batch
+
 
 EXTRACT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -145,33 +162,22 @@ def extract_text(df: DataFrame, cfg: ParserConfig = EXTRACT_CONFIG,
     the pandas detour entirely.
     """
 
-    def run(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            docs = rb.column(text_col).to_pylist()
+    def per_batch(doc_batches):
+        for docs in doc_batches:
             ex = []
             tr = []
             nev = []
             nch = []
             for doc in docs:
-                doc = doc if isinstance(doc, str) else ""
                 rows = tokenize(doc, cfg)
                 txt = assemble.document_text(doc, rows, cfg, textify)
                 ex.append(txt)
                 tr.append(assemble.collapse_ws(txt))
                 nev.append(len(rows))
                 nch.append(len(doc))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column("conv_id"), rb.column("turn_idx"),
-                 _pa_arr(ex, pa.string()), _pa_arr(tr, pa.string()),
-                 pa.array(nev, pa.int32()), pa.array(nch, pa.int32())],
-                names=EXTRACT_SCHEMA.fieldNames())
+            yield None, [ex, tr, nev, nch]
 
-    cols = [F.col("conv_id").cast("string"),
-            F.col("turn_idx").cast("int"),
-            F.col(text_col)]
-    return df.select(*cols).mapInArrow(run, EXTRACT_SCHEMA)
+    return _arrow_map(df, text_col, EXTRACT_SCHEMA, per_batch)
 
 
 EVENTS_SCHEMA = T.StructType([
@@ -204,10 +210,6 @@ EVENTS_SCHEMA = T.StructType([
 EVENT_FIELDS = tuple(
     f for f in EVENTS_SCHEMA.fieldNames()
     if f not in ("conv_id", "turn_idx", "seq"))
-
-
-_ARROW_TYPES = {f.name: _to_arrow_type(f.dataType)
-                for f in EVENTS_SCHEMA}
 
 
 def events(df: DataFrame, cfg: ParserConfig = ParserConfig(),
@@ -248,9 +250,9 @@ def events(df: DataFrame, cfg: ParserConfig = ParserConfig(),
         # without it the selected column would be silently all-null
         cfg = cfg.with_(track_skipped_text=True)
 
-    arrow_fields = [(f.name, _ARROW_TYPES[f.name]) for f in schema]
+    val_names = schema.fieldNames()[2:]
 
-    def run(batches):
+    def per_batch(doc_batches):
         # One fused loop materializes all selected fields per event:
         # raw text / token0 / attrs are computed at most once each and
         # shared between the fields that need them — no per-field
@@ -288,10 +290,10 @@ def events(df: DataFrame, cfg: ParserConfig = ParserConfig(),
         need_txt = w_text or w_dtext or w_len or w_offend
         lower = not cfg.is_case_sensitive
 
-        for rb in batches:
-            cols: dict[str, list] = {k: [] for k in schema.fieldNames()}
-            a_conv = cols["conv_id"].append
-            a_turn = cols["turn_idx"].append
+        for docs in doc_batches:
+            idx: list[int] = []
+            a_idx = idx.append
+            cols: dict[str, list] = {k: [] for k in val_names}
             a_seq = cols["seq"].append
             # the attrs map column is built flat (offsets + key/value
             # runs -> MapArray.from_arrays): ~13x cheaper than
@@ -317,17 +319,11 @@ def events(df: DataFrame, cfg: ParserConfig = ParserConfig(),
             a_line = ap.get("line")
             a_col = ap.get("column")
             a_skip = ap.get("skipped_text")
-            for conv_id, turn_idx, doc in zip(
-                rb.column("conv_id").to_pylist(),
-                rb.column("turn_idx").to_pylist(),
-                rb.column(text_col).to_pylist(),
-            ):
-                doc = doc if isinstance(doc, str) else ""
+            for i, doc in enumerate(docs):
                 for seq, row in enumerate(tokenize(doc, cfg)):
                     ev = row[0]
                     toks = row[3]
-                    a_conv(conv_id)
-                    a_turn(turn_idx)
+                    a_idx(i)
                     a_seq(seq)
                     if need_txt:
                         txt = (row[9] if row[9] is not None
@@ -393,24 +389,15 @@ def events(df: DataFrame, cfg: ParserConfig = ParserConfig(),
                         a_col(row[7])
                     if w_skip:
                         a_skip(row[8])
-            if cols["conv_id"]:
-                if w_attrs:
-                    attr_offs.append(len(attr_keys))
-                arrays = []
-                for name, typ in arrow_fields:
-                    if name == "attrs" and w_attrs:
-                        arrays.append(pa.MapArray.from_arrays(
-                            pa.array(attr_offs, pa.int32()),
-                            _pa_arr(attr_keys, pa.string()),
-                            _pa_arr(attr_vals, pa.string())))
-                    else:
-                        arrays.append(_pa_arr(cols[name], typ))
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=[name for name, _ in arrow_fields])
+            if w_attrs:
+                attr_offs.append(len(attr_keys))
+                cols["attrs"] = pa.MapArray.from_arrays(
+                    pa.array(attr_offs, pa.int32()),
+                    _pa_arr(attr_keys, pa.string()),
+                    _pa_arr(attr_vals, pa.string()))
+            yield idx, [cols[n] for n in val_names]
 
-    return df.select(F.col("conv_id").cast("string"),
-                     F.col("turn_idx").cast("int"),
-                     text_col).mapInArrow(run, schema)
+    return _arrow_map(df, text_col, schema, per_batch)
 
 
 HEADERS_SCHEMA = T.StructType([
@@ -428,13 +415,12 @@ def head_headers(df: DataFrame, cfg: ParserConfig = _HEAD_CFG,
                  text_col: str = "text") -> DataFrame:
     """HeadParser-equivalent metadata capture (SURVEY.md Q1)."""
 
-    def per_turn(doc):
-        rows = tokenize(doc, cfg)
+    def rows(doc):
         for i, (name, value) in enumerate(
-                assemble.head_headers(doc, rows, cfg)):
+                assemble.head_headers(doc, tokenize(doc, cfg), cfg)):
             yield i, name, value
 
-    return _fanout_arrow(df, text_col, HEADERS_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, HEADERS_SCHEMA, _fan_out(rows))
 
 
 LINKS_SCHEMA = T.StructType([
@@ -451,11 +437,11 @@ def links(df: DataFrame, cfg: ParserConfig = ParserConfig(),
           base: str | None = None, text_col: str = "text") -> DataFrame:
     """LinkExtor-equivalent link extraction (SURVEY.md Q2)."""
 
-    def per_turn(doc):
+    def rows(doc):
         return assemble.extract_links(doc, tokenize(doc, cfg), cfg,
                                       base)
 
-    return _fanout_arrow(df, text_col, LINKS_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, LINKS_SCHEMA, _fan_out(rows))
 
 
 ANCHORS_SCHEMA = T.StructType([
@@ -471,10 +457,10 @@ def anchors(df: DataFrame, cfg: ParserConfig = ParserConfig(),
             text_col: str = "text") -> DataFrame:
     """eg/hanchors: (anchor_seq, href, trimmed anchor text) per <a>."""
 
-    def per_turn(doc):
+    def rows(doc):
         return assemble.anchors(doc, tokenize(doc, cfg), cfg)
 
-    return _fanout_arrow(df, text_col, ANCHORS_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, ANCHORS_SCHEMA, _fan_out(rows))
 
 
 PHRASE_SCHEMA = T.StructType([
@@ -494,11 +480,11 @@ def phrase_text(df: DataFrame, cfg: ParserConfig = ParserConfig(),
         # get_phrase never reads positions — lazy disable (O5)
         cfg = cfg.with_(track_positions=False)
 
-    def per_turn(doc):
-        yield (assemble.get_phrase(doc, tokenize(doc, cfg), cfg,
-                                   textify)[0],)
+    def row(doc):
+        return (assemble.get_phrase(doc, tokenize(doc, cfg), cfg,
+                                    textify)[0],)
 
-    return _fanout_arrow(df, text_col, PHRASE_SCHEMA, per_turn)
+    return _arrow_map(df, text_col, PHRASE_SCHEMA, _each_turn(row))
 
 
 REWRITE_SCHEMA = T.StructType([
@@ -508,19 +494,16 @@ REWRITE_SCHEMA = T.StructType([
 ])
 
 
-def _per_turn_doc(df: DataFrame, fn, text_col: str) -> DataFrame:
-    return _fanout_arrow(df, text_col, REWRITE_SCHEMA,
-                         lambda doc: ((fn(doc),),))
-
-
 def rewrite_links(df: DataFrame, rewrite,
                   cfg: ParserConfig = ParserConfig(),
                   text_col: str = "text") -> DataFrame:
     """eg/hrefsub: tokenpos-surgery URL rewriting; bytes outside the
     rewritten attr values are untouched."""
-    return _per_turn_doc(
-        df, lambda d: assemble.rewrite_links(d, tokenize(d, cfg), cfg,
-                                             rewrite), text_col)
+    def row(doc):
+        return (assemble.rewrite_links(doc, tokenize(doc, cfg), cfg,
+                                       rewrite),)
+
+    return _arrow_map(df, text_col, REWRITE_SCHEMA, _each_turn(row))
 
 
 def strip_markup(df: DataFrame, cfg: ParserConfig = ParserConfig(),
@@ -529,9 +512,11 @@ def strip_markup(df: DataFrame, cfg: ParserConfig = ParserConfig(),
                  text_col: str = "text") -> DataFrame:
     """eg/hstrip: drop styling tags + style/script subtrees, keep the
     rest byte-identical (Filter.pm identity over filtered events)."""
-    return _per_turn_doc(
-        df, lambda d: assemble.strip_markup(d, None, cfg, strip_tags,
-                                            strip_elements), text_col)
+    def row(doc):
+        return (assemble.strip_markup(doc, None, cfg, strip_tags,
+                                      strip_elements),)
+
+    return _arrow_map(df, text_col, REWRITE_SCHEMA, _each_turn(row))
 
 
 def bom_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -142,6 +142,9 @@ def pagerank(edges: DataFrame, iters: int = 3, scale: int = 10 ** 9,
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
+    if seed_hosts is not None and not seed_hosts:
+        # an empty trust set gives every host 0: refuse, like iters
+        raise ValueError("seed_hosts must name at least one host")
     nodes = (edges.select(F.col("src").alias("host"))
              .unionByName(edges.select(F.col("dst").alias("host")))
              .distinct())

@@ -3,20 +3,25 @@
 at sf0.01, compare row count + order-insensitive values.
 
 Usage: python scripts/check_oracles.py [query ...]
+Spark runs at ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may use).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-import os
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -49,8 +54,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
+    spark = (SparkSession.builder.master(f"local[{CPUS}]")
+             .config("spark.sql.shuffle.partitions", str(CPUS))
              .config("spark.ui.enabled", "false")
              .config("spark.driver.memory", "8g")
              .getOrCreate())

@@ -64,7 +64,8 @@ def main() -> None:
                          "a TrustRank column beside PageRank")
     ap.add_argument("--blocked-domains", default="",
                     help="comma-separated URL-gate domain blocklist")
-    ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

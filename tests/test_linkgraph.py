@@ -5,6 +5,7 @@ fixed-point design exists for), and the URL-hardening posture."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.operators.linkgraph import (
@@ -130,6 +131,9 @@ def test_trustrank_seed_propagation_exact(spark):
            for r in pagerank(_edges(spark, pairs), iters=2,
                              seed_hosts=("SEED.COM",)).collect()}
     assert got == _py_pagerank(pairs, 2, seeds={"seed.com"})
+    # an empty seed set is refused, not scored all-zero
+    with pytest.raises(ValueError, match="seed_hosts"):
+        pagerank(_edges(spark, pairs), seed_hosts=())
 
 
 def test_trustrank_dangling_mass_returns_to_seeds_only(spark):

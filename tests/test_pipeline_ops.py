@@ -709,7 +709,7 @@ def test_extract_text_stream_matches_batch(spark, tmp_path):
     tr.write.parquet(src)
 
     stream = es.read_transcript_stream(spark, src, tr.schema)
-    q = (es.extract_text_stream(stream, EXTRACT_CONFIG)
+    q = (extract_text(stream, EXTRACT_CONFIG)
          .writeStream.format("memory").queryName("ex_stream")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -740,10 +740,10 @@ def test_headers_links_stream_match_batch(spark, tmp_path):
     tr.write.parquet(src)
     stream = es.read_transcript_stream(spark, src, tr.schema)
 
-    qh = (es.head_headers_stream(stream)
+    qh = (head_headers(stream)
           .writeStream.format("memory").queryName("hdr_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    ql = (es.links_stream(stream)
+    ql = (links(stream)
           .writeStream.format("memory").queryName("lnk_stream")
           .outputMode("append").trigger(availableNow=True).start())
     qh.awaitTermination(120)
@@ -780,11 +780,11 @@ def test_events_stream_matches_batch(spark, tmp_path):
     tr.write.parquet(src)
     stream = es.read_transcript_stream(spark, src, tr.schema)
 
-    qe = (es.events_stream(stream)
+    qe = (events(stream)
           .writeStream.format("memory").queryName("ev_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    qa = (es.events_stream(stream, ParserConfig(),
-                           fields=("event", "tag", "offset"))
+    qa = (events(stream, ParserConfig(),
+                 fields=("event", "tag", "offset"))
           .writeStream.format("memory").queryName("ev_stream_argspec")
           .outputMode("append").trigger(availableNow=True).start())
     qe.awaitTermination(120)
@@ -2526,20 +2526,33 @@ def test_invalid_unicode_entity_doc_survives(spark):
     from html_parser_spark.config import EXTRACT_CONFIG, ParserConfig
     from html_parser_spark.functions.tokenizer import tokenize
     from html_parser_spark.operators import extract as ops
+    from html_parser_spark.operators.content import main_content
 
     bad = "&#xD800;&#xFFFF;éab&#xDC00;"
     doc = f'<p a="{bad}">{bad}</p>'
     tr = spark.createDataFrame(
-        [("c", 0, doc), ("c", 1, "<p>fine</p>")],
+        [("c", 0, doc), ("c", 1, "<p>fine</p>"), ("c", 2, None),
+         ("c", 3, '<a href="&#xD800;">x</a>')],
         "conv_id string, turn_idx int, text string")
     got = {r.turn_idx: r.extracted_text
            for r in ops.extract_text(tr, EXTRACT_CONFIG).collect()}
-    assert "�" in got[0] and got[1] == " fine "
-    # full events surface (dtext + attr map carry the decoded value)
-    assert ops.events(tr, ParserConfig()).count() == 6
+    assert "�" in got[0] and got[1] == " fine " and got[2] == ""
+    # full events surface (dtext + attr map carry the decoded value);
+    # a NULL turn is the empty document: no events
+    ev = [r.turn_idx for r in ops.events(tr, ParserConfig()).collect()]
+    assert sorted(ev) == [0] * 3 + [1] * 3 + [3] * 3
+    # fan-out boundary: the decoded href degrades to U+FFFD
+    assert [(r.turn_idx, r.url) for r in ops.links(tr).collect()] == \
+        [(3, "�")]
+    # one-row-per-turn boundary: a defined row for every turn
+    mc = {r.turn_idx: r.main_text
+          for r in main_content(tr, min_words=1).collect()}
+    assert "�" in mc[0] and mc[1] == "fine" and mc[2] == ""
+    # the column decoder keeps NULL as NULL (it is not a turn op)
     dec = tr.select(ops.decode_entities_col(F.col("text"))
                     .alias("d")).collect()
-    assert all(r.d.encode("utf-8") is not None for r in dec)
+    assert all(r.d is None or r.d.encode("utf-8") is not None
+               for r in dec)
 
     # marked-section EOF-']' crash regression (matches the compiled
     # reference's observable output)
@@ -3282,6 +3295,11 @@ def test_url_filter_gates(spark):
         and got[6].keep_url
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Python" not in plan
+    # an input 'host' column is replaced, never duplicated
+    again = url_filter(df.withColumn("host", F.lit("stale")))
+    assert again.columns.count("host") == 1
+    assert {r.doc_id: r.host for r in again.collect()} == \
+        {i: r.host for i, r in got.items()}
 
 
 def test_term_freq(spark):
